@@ -26,8 +26,10 @@ RUNTIME_CONF: dict[str, str] = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Arrow for any pandas UDF / toPandas path (vector ops, multimodal).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # events.parquet stores TIMESTAMP(NANOS) which Spark's reader rejects;
-    # read nanos as raw longs and convert in the loader (sources/tables.py).
+    # Spark's reader rejects parquet TIMESTAMP(NANOS); read such a column as
+    # raw epoch-nanos longs and convert in the loader (sources/tables.py).
+    # The testdata stores TIMESTAMP(MICROS), so this path serves only files
+    # that do store nanos.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Unadjusted-UTC parquet timestamps must come back as TIMESTAMP (LTZ,
     # session tz pinned to UTC above), not TIMESTAMP_NTZ: watermarks/windows
@@ -54,12 +56,23 @@ def default_parallelism() -> int:
 
 
 def ensure_runtime_conf(spark: SparkSession) -> SparkSession:
-    """Apply semantic + adaptive confs to an existing session (idempotent)."""
+    """Apply semantic + adaptive confs to an existing session (idempotent).
+
+    Raises if a conf does not take: each one carries semantics (a session
+    time zone other than UTC silently shifts every window boundary), so a
+    session that cannot hold them must not run queries."""
     for key, value in RUNTIME_CONF.items():
+        if spark.conf.get(key, None) == value:
+            continue
         try:
             spark.conf.set(key, value)
-        except Exception:  # pragma: no cover - conf may be static in some envs
-            pass
+            actual = spark.conf.get(key, None)
+        except Exception as exc:
+            raise RuntimeError(f"could not set Spark conf {key}={value!r}") from exc
+        if actual != value:
+            raise RuntimeError(
+                f"Spark conf {key} is {actual!r} after setting it to {value!r}"
+            )
     return spark
 
 

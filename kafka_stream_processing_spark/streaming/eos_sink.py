@@ -271,7 +271,10 @@ def _register_roundtrip_query() -> None:
     from pyspark.sql import SparkSession, functions as F
 
     from kafka_stream_processing_spark.registry import register
-    from kafka_stream_processing_spark.sources.tables import normalize_events
+    from kafka_stream_processing_spark.sources.tables import (
+        normalize_events,
+        table_schema,
+    )
 
     uniq = itertools.count()
 
@@ -301,7 +304,6 @@ def _register_roundtrip_query() -> None:
         )
 
         path = _stream_chunked_source_dir(sf_dir)
-        raw_schema = spark.read.parquet(path).schema
         run = next(uniq)
         base = os.path.join(
             "/tmp", "kssp_eos_roundtrip", f"{os.getpid()}_{run}"
@@ -318,7 +320,7 @@ def _register_roundtrip_query() -> None:
         )
         stream = (
             normalize_events(
-                spark.readStream.schema(raw_schema)
+                spark.readStream.schema(table_schema("events", path))
                 .option("maxFilesPerTrigger", 1)
                 .parquet(path)
             )

@@ -28,7 +28,10 @@ from kafka_stream_processing_spark.operators.text import (
     TOP_BIGRAM_FRAC_MAX,
 )
 from kafka_stream_processing_spark.registry import register
-from kafka_stream_processing_spark.sources.tables import normalize_events
+from kafka_stream_processing_spark.sources.tables import (
+    normalize_events,
+    table_schema,
+)
 from kafka_stream_processing_spark.streaming.unique_users import (
     _stream_source_dir,
     scoped_state_partitions,
@@ -65,12 +68,13 @@ def stream_stream_join_click_purchase(spark: SparkSession, sf_dir: str) -> DataF
     forever (the same unbounded-state disease as the reference's HashSet,
     in join form).  One shuffle per side on user_id."""
     path = _stream_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     name = f"ssj_{next(_uniq)}"
 
     def side(event_type: str, prefix: str) -> DataFrame:
         return (
-            normalize_events(spark.readStream.schema(raw_schema).parquet(path))
+            normalize_events(
+                spark.readStream.schema(table_schema("events", path)).parquet(path)
+            )
             .filter(F.col("event_type") == event_type)
             .select(
                 F.col("event_id").alias(f"{prefix}_id"),
@@ -155,11 +159,11 @@ def stream_static_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
+    schema = table_schema("events", path)
     name = f"stream_static_{next(_uniq)}"
 
     profile = (
-        normalize_events(spark.read.schema(raw_schema).parquet(path))
+        normalize_events(spark.read.schema(schema).parquet(path))
         .groupBy("user_id")
         .agg(F.sum(dec("value")).cast("double").alias("total_value"))
         .withColumn(
@@ -172,7 +176,7 @@ def stream_static_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stream = (
         normalize_events(
-            spark.readStream.schema(raw_schema)
+            spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(path)
         )
@@ -258,12 +262,13 @@ def stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
     gate checks both rules.  State bounds identical to the inner
     variant."""
     path = _stream_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     name = f"ssloj_{next(_uniq)}"
 
     def side(event_type: str, prefix: str) -> DataFrame:
         return (
-            normalize_events(spark.readStream.schema(raw_schema).parquet(path))
+            normalize_events(
+                spark.readStream.schema(table_schema("events", path)).parquet(path)
+            )
             .filter(F.col("event_type") == event_type)
             .select(
                 F.col("event_id").alias(f"{prefix}_id"),
@@ -337,7 +342,7 @@ def _stage_doc_chunks(sf_dir: str, where: str, label: str,
         n = t.num_rows
         if n == 0:
             # A chunk-less directory would be cached by the marker and
-            # then fail every later schema inference with no hint why.
+            # then feed every later stream an empty source with no hint why.
             raise ValueError(
                 f"document slice {where!r} matched 0 rows in {src}; "
                 "refusing to stage an empty stream source"
@@ -408,7 +413,6 @@ def stream_ingest_dedup_static_corpus(spark: SparkSession, sf_dir: str) -> DataF
     (UniqueUsersCounter.java:56,63), with the dedup contract made
     explicit instead of implicit in producer retries."""
     path = _stream_doc_batch_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     name = f"stream_ingest_dedup_{next(_uniq)}"
 
     from kafka_stream_processing_spark.sources.tables import table
@@ -424,7 +428,7 @@ def stream_ingest_dedup_static_corpus(spark: SparkSession, sf_dir: str) -> DataF
         .persist()
     )
     stream = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("documents", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
         .select(F.md5(F.col("text").cast("binary")).alias("h"))
@@ -496,7 +500,6 @@ def stream_contamination_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     path = _stream_train_docs_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     name = f"stream_contamination_{next(_uniq)}"
     from kafka_stream_processing_spark.session import default_parallelism
 
@@ -506,7 +509,7 @@ def stream_contamination_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stateless shuffle is append-safe).  Measured at sf0.1: 16.4 s ->
     # ~2 s end-to-end for the 3-trigger run.
     stream = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("documents", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
         .repartition(default_parallelism())
@@ -618,7 +621,6 @@ def stream_lm_surprisal_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     path = _stream_train_docs_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     name = f"stream_lm_scores_{next(_uniq)}"
     toks = F.split("text", " ")
     # OOV convention: a word missing from the deployed LM artifact makes
@@ -638,7 +640,7 @@ def stream_lm_surprisal_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_found = F.size(found)
     stream = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("documents", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
         .repartition(default_parallelism())
@@ -711,7 +713,6 @@ def stream_cdc_last_writer_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     import tempfile
 
     import shutil
@@ -765,7 +766,7 @@ def stream_cdc_last_writer_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
         state["gen"] += 1
 
     stream = normalize_events(
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("events", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
@@ -932,9 +933,8 @@ def stream_ks_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         results.append((min_doc, nb, d, crit, d > crit))
 
     path = _stream_train_docs_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     stream = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("documents", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
         .select("doc_id", "n_chars")
@@ -990,7 +990,6 @@ def stream_countmin_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     acc: dict[tuple[int, int], int] = {}
 
     def fold_batch(batch_df, batch_id: int) -> None:
@@ -1002,7 +1001,7 @@ def stream_countmin_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             acc[key] = acc.get(key, 0) + row["c"]
 
     stream = normalize_events(
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("events", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
@@ -1120,13 +1119,12 @@ def stream_ivf_index_maintenance(
     from kafka_stream_processing_spark.operators.similarity import ivf_cell
 
     path = _stream_embeddings_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     name = f"stream_ivf_{next(_uniq)}"
 
     from kafka_stream_processing_spark.session import default_parallelism
 
     stream = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("embeddings", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
         # one chunk file = one input split; without the fan-out the whole
@@ -1267,7 +1265,6 @@ def stream_benford_digit_monitor(
     )
 
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     rows: list[tuple[int, int, int]] = []
 
     def fold_batch(batch_df, batch_id: int) -> None:
@@ -1289,7 +1286,7 @@ def stream_benford_digit_monitor(
             rows.append((int(key), d, int(got.get(d, 0))))
 
     stream = normalize_events(
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("events", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
@@ -1404,7 +1401,6 @@ def stream_split_leakage_incremental(
     )
 
     path = _all_docs_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
 
     key = sf_dir.strip("/").replace("/", "_")
     root = os.path.join("/tmp", "kssp_leak_idx", key)
@@ -1457,7 +1453,7 @@ def stream_split_leakage_incremental(
         state["gen"] += 1
 
     stream = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("documents", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
@@ -1638,9 +1634,8 @@ def stream_mannwhitney_monitor(
         results.append((min_doc, nb, u2, z, abs(z) > MWU_Z_CRIT_005))
 
     path = _stream_train_docs_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     stream = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("documents", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
         .select("doc_id", "n_chars")
@@ -1771,7 +1766,6 @@ def stream_good_turing_novelty(
     import time
 
     path = _source_path or _all_docs_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
 
     key = sf_dir.strip("/").replace("/", "_")
     root = os.path.join("/tmp", "kssp_gt_vocab", key)
@@ -1886,7 +1880,7 @@ def stream_good_turing_novelty(
             state["idx"] += 1
 
     stream = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("documents", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
         .select("doc_id", "text")
@@ -2056,9 +2050,8 @@ def stream_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows.append((int(key), int(r["bucket"]), int(r["cb"])))
 
     path = _stream_train_docs_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     stream = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("documents", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
         .select("doc_id", "n_chars")
@@ -2240,7 +2233,6 @@ def stream_ab_ztest_monitor(
     )
 
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     rows: list[tuple[int, int, int, int, int]] = []
 
     def fold_batch(batch_df, batch_id: int) -> None:
@@ -2284,7 +2276,7 @@ def stream_ab_ztest_monitor(
         )
 
     stream = normalize_events(
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("events", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
@@ -2437,7 +2429,6 @@ def stream_isotonic_recalibration(
     )
 
     path = _stream_train_docs_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     rows: list[tuple[int, int, int, int]] = []
 
     def fold_batch(batch_df, batch_id: int) -> None:
@@ -2465,7 +2456,7 @@ def stream_isotonic_recalibration(
             )
 
     stream = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("documents", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
         .select("doc_id", "n_chars", "text")
@@ -2601,7 +2592,6 @@ def stream_pettitt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     cells: list[tuple[int, str, int]] = []
 
     def fold_batch(batch_df, batch_id: int) -> None:
@@ -2623,7 +2613,7 @@ def stream_pettitt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             cells.append((ck, r["day"].isoformat(), xm))
 
     stream = normalize_events(
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("events", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
@@ -2773,7 +2763,6 @@ def stream_markov_transition_monitor(
     )
 
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     cells: list[tuple[int, str, str, int]] = []
 
     def fold_batch(batch_df, batch_id: int) -> None:
@@ -2801,7 +2790,7 @@ def stream_markov_transition_monitor(
                 )
 
     stream = normalize_events(
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("events", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
@@ -2886,7 +2875,6 @@ def stream_weighted_sample_merge(
     )
 
     path = _stream_train_docs_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     reservoir: list[tuple[float, int, int]] = []  # (-key, doc_id, w)
 
     def fold_batch(batch_df, batch_id: int) -> None:
@@ -2916,7 +2904,7 @@ def stream_weighted_sample_merge(
         del reservoir[ES_SAMPLE_K:]
 
     stream = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("documents", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
         .select("doc_id", "n_chars")
@@ -3009,7 +2997,6 @@ def stream_funnel_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     cells: list[tuple[int, int, int]] = []
 
     def fold_batch(batch_df, batch_id: int) -> None:
@@ -3040,7 +3027,7 @@ def stream_funnel_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         cells.append((int(mi), n_clicked, n_conv))
 
     stream = normalize_events(
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("events", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
@@ -3167,7 +3154,6 @@ def stream_attribution_monitor(
     from pyspark.sql import Window
 
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     cells: list[tuple] = []
 
     def fold_batch(batch_df, batch_id: int) -> None:
@@ -3252,7 +3238,7 @@ def stream_attribution_monitor(
             )
 
     stream = normalize_events(
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("events", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
@@ -3392,9 +3378,8 @@ def stream_ece_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     path = _stage_doc_chunks(sf_dir, "source = 'src0'", "testdocs")
-    raw_schema = spark.read.parquet(path).schema
     stream = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("documents", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
         .select("doc_id", "n_chars", "text")
@@ -3555,9 +3540,8 @@ def stream_quantile_monitor(
             rows.append((int(key), int(r["v"]), int(r["c"])))
 
     path = _stream_train_docs_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     stream = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("documents", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
         .select("doc_id", "n_chars")
@@ -3711,9 +3695,8 @@ def stream_filter_yield_monitor(
         rows.append((int(agg["k"]), int(agg["n"]), int(agg["kept"])))
 
     path = _stream_train_docs_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     stream = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("documents", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
         .select("doc_id", "text")
@@ -3833,7 +3816,6 @@ def stream_scd2_incremental(
     )
 
     path = _source_path or _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     key = sf_dir.strip("/").replace("/", "_")
     root = os.path.join("/tmp", "kssp_scd2_target", key)
     os.makedirs(root, exist_ok=True)
@@ -3999,7 +3981,7 @@ def stream_scd2_incremental(
             state["idx"] += 1
 
     stream = normalize_events(
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("events", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
@@ -4132,7 +4114,6 @@ def stream_bottomk_maintenance(
     )
 
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     sketch: set[int] = set()
     seen: set[int] = set()  # exact prefix count: test-scale audit only
     rows: list[tuple[int, int, int]] = []
@@ -4171,7 +4152,7 @@ def stream_bottomk_maintenance(
         rows.append((int(key), len(seen), len(sketch)))
 
     stream = normalize_events(
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("events", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
@@ -4346,9 +4327,8 @@ def stream_l_diversity_monitor(
         )
 
     path = _stream_train_docs_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     stream = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("documents", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
         .select("doc_id", "lang", "source", "n_chars")
@@ -4484,9 +4464,8 @@ def stream_wasserstein_monitor(
             rows.append((int(key), int(r["v"]), int(r["c"])))
 
     path = _stream_train_docs_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     stream = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("documents", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
         .select("doc_id", "n_chars")
@@ -4684,7 +4663,6 @@ def stream_circadian_monitor(
     )
 
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     rows: list[tuple[int, int, int, int]] = []
 
     def fold_batch(batch_df, batch_id: int) -> None:
@@ -4718,7 +4696,7 @@ def stream_circadian_monitor(
             )
 
     stream = normalize_events(
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("events", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
@@ -4888,9 +4866,8 @@ def stream_repetition_monitor(
         rows.append((int(agg["k"]), int(agg["n"]), int(agg["nrep"])))
 
     path = _stream_train_docs_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     stream = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("documents", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
         .select("doc_id", "text")
@@ -5012,7 +4989,6 @@ def stream_permutation_entropy_monitor(
     )
 
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     cells: list[tuple[int, str, int]] = []
 
     def fold_batch(batch_df, batch_id: int) -> None:
@@ -5034,7 +5010,7 @@ def stream_permutation_entropy_monitor(
             cells.append((ck, r["day"].isoformat(), xm))
 
     stream = normalize_events(
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("events", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
@@ -5139,7 +5115,6 @@ def stream_ams_f2_incremental(
     )
 
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     acc: dict[int, int] = {}
 
     def fold_batch(batch_df, batch_id: int) -> None:
@@ -5150,7 +5125,7 @@ def stream_ams_f2_incremental(
             acc[row["r"]] = acc.get(row["r"], 0) + row["zr"]
 
     stream = normalize_events(
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("events", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
@@ -5282,9 +5257,8 @@ def stream_tail_es_monitor(
             rows.append((int(key), int(r["v"]), int(r["c"])))
 
     path = _stream_train_docs_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     stream = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("documents", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
         .select("doc_id", "n_chars")
@@ -5534,9 +5508,8 @@ def stream_extremal_index_monitor(
         )
 
     path = _stream_train_docs_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     stream = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("documents", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
         .select("doc_id", "n_chars")

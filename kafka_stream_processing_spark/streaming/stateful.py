@@ -23,7 +23,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from kafka_stream_processing_spark.registry import register
-from kafka_stream_processing_spark.sources.tables import normalize_events
+from kafka_stream_processing_spark.sources.tables import (
+    normalize_events,
+    table_schema,
+)
 from kafka_stream_processing_spark.streaming.unique_users import (
     _stream_chunked_source_dir,
     scoped_state_partitions,
@@ -91,12 +94,11 @@ def stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     emission per user must equal the batch aggregate.  State is 3 integers
     per user — bounded, checkpointed, and GC-able via timeouts at scale."""
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     name = f"stateful_{next(_uniq)}"
 
     stream = (
         normalize_events(
-            spark.readStream.schema(raw_schema)
+            spark.readStream.schema(table_schema("events", path))
             .option("maxFilesPerTrigger", 1)
             .parquet(path)
         )
@@ -232,11 +234,10 @@ def stream_frequent_pairs_stateful(
     extension reuses the same masks (Apriori downward closure prunes
     candidate triples to pairs already frequent)."""
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     name = f"freqpairs_{next(_uniq)}"
 
     stream = normalize_events(
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("events", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     ).select("user_id", "event_type")
@@ -383,11 +384,10 @@ def stream_frequent_triples_stateful(
     the two folds are conditional aggregates over users — no shuffle
     beyond the user-key state exchange the pairs op already pays."""
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     name = f"freqtriples_{next(_uniq)}"
 
     stream = normalize_events(
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("events", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     ).select("user_id", "event_type")

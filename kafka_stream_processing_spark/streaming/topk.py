@@ -32,7 +32,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from kafka_stream_processing_spark.registry import register
-from kafka_stream_processing_spark.sources.tables import normalize_events
+from kafka_stream_processing_spark.sources.tables import (
+    normalize_events,
+    table_schema,
+)
 from kafka_stream_processing_spark.streaming.unique_users import (
     _stream_chunked_source_dir,
     scoped_state_partitions,
@@ -98,12 +101,11 @@ def stream_user_topk_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-3 micro-int values plus a monotone seen-counter used to select
     each user's final emission from the update-mode sink."""
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     name = f"user_topk_{next(_uniq)}"
 
     stream = (
         normalize_events(
-            spark.readStream.schema(raw_schema)
+            spark.readStream.schema(table_schema("events", path))
             .option("maxFilesPerTrigger", 1)
             .parquet(path)
         )
@@ -156,7 +158,6 @@ def stream_global_topk_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFra
     at termination.  Top-k is order-insensitive to how the stream is
     chunked, which the oracle check proves."""
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     # Keyed by batch_id so a replayed micro-batch (transient failure →
     # Spark re-runs the epoch) OVERWRITES its prior contribution instead
     # of double-merging — the same idempotence recipe
@@ -176,7 +177,7 @@ def stream_global_topk_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFra
 
     stream = (
         normalize_events(
-            spark.readStream.schema(raw_schema)
+            spark.readStream.schema(table_schema("events", path))
             .option("maxFilesPerTrigger", 1)
             .parquet(path)
         )

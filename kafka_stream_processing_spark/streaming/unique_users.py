@@ -33,7 +33,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_stream_processing_spark.registry import register
-from kafka_stream_processing_spark.sources.tables import normalize_events
+from kafka_stream_processing_spark.sources.tables import (
+    normalize_events,
+    table_schema,
+)
 
 _run_counter = itertools.count()
 
@@ -249,11 +252,11 @@ def stream_unique_users_per_minute(spark: SparkSession, sf_dir: str) -> DataFram
     Registered with the same oracle as the batch flagship — streaming and
     batch must agree exactly."""
     path = _stream_source_dir(sf_dir)
-    # Raw schema (ts as nanos-long under nanosAsLong), normalized after.
-    raw_schema = spark.read.parquet(path).schema
     name = f"stream_unique_users_{next(_run_counter)}"
 
-    stream = normalize_events(spark.readStream.schema(raw_schema).parquet(path))
+    stream = normalize_events(
+        spark.readStream.schema(table_schema("events", path)).parquet(path)
+    )
     deduped = build_windowed_dedup(stream)
     with scoped_state_partitions(spark):
         query = (
@@ -310,10 +313,11 @@ def stream_chained_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator exists to demonstrate, and would not touch the dominant
     cost class."""
     path = _stream_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     name = f"chained_{next(_run_counter)}"
 
-    stream = normalize_events(spark.readStream.schema(raw_schema).parquet(path))
+    stream = normalize_events(
+        spark.readStream.schema(table_schema("events", path)).parquet(path)
+    )
     per_minute = (
         stream.withWatermark("ts", "5 seconds")
         .groupBy(F.window("ts", "1 minute").alias("mw"))
@@ -394,11 +398,10 @@ def stream_session_windows_per_user(spark: SparkSession, sf_dir: str) -> DataFra
     has at most one open session; closed ones are evicted at watermark) —
     unlike the reference's unbounded per-window HashSet."""
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     name = f"stream_sessions_{next(_run_counter)}"
 
     stream = normalize_events(
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("events", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
@@ -447,10 +450,11 @@ def stream_unique_users_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     real Structured Streaming run — each event enters two windows'
     dedup state; same oracle as the batch sliding query."""
     path = _stream_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     name = f"stream_sliding_{next(_run_counter)}"
 
-    stream = normalize_events(spark.readStream.schema(raw_schema).parquet(path))
+    stream = normalize_events(
+        spark.readStream.schema(table_schema("events", path)).parquet(path)
+    )
     deduped = build_windowed_dedup(stream, slide="30 seconds")
     with scoped_state_partitions(spark):
         query = (
@@ -511,12 +515,11 @@ def stream_dedup_at_least_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the deliberate pairing: unbounded-correctness here, bounded-state
     variant proven in tests."""
     path = _stream_redelivery_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     name = f"stream_alo_dedup_{next(_run_counter)}"
 
     stream = (
         normalize_events(
-            spark.readStream.schema(raw_schema)
+            spark.readStream.schema(table_schema("events", path))
             .option("maxFilesPerTrigger", 1)
             .parquet(path)
         )
@@ -668,11 +671,10 @@ def stream_watermark_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     is per-open-window counters, evicted at watermark; lateness bounds
     state, not correctness."""
     path = _stream_late_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     name = f"stream_late_{next(_run_counter)}"
 
     stream = normalize_events(
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("events", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
@@ -745,11 +747,10 @@ def stream_update_mode_running_counts(
     key per batch — the changelog volume a Kafka-backed KTable carries)
     for zero emission latency, exactly the trade the reference made."""
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     name = f"stream_update_counts_{next(_run_counter)}"
 
     stream = normalize_events(
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(table_schema("events", path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
