@@ -62,21 +62,24 @@ def scoped_state_partitions(spark: SparkSession, n: int | None = None):
     A stateful query's state partition count is `spark.sql.shuffle.
     partitions` at FIRST run (baked into the checkpoint thereafter) — a
     per-query sizing decision tied to key cardinality and throughput,
-    independent of how batch shuffles are sized.  Locally the test
-    streams carry O(10k) keys at most, and the HDFS-backed state store
-    pays a FIXED per-partition commit cost (delta-file write + fsync)
-    per stateful operator per trigger, so fewer partitions win until a
-    partition's state stops fitting comfortably: measured at sf0.1
-    (r09, 5 reps, median wall): chained window agg 1.47 s at 8 → 1.20 s
-    at 4 → 1.15 s at 2 (commitTimeMs scales ~linearly with partition
-    count while addBatch is flat); stream_unique_users 1.74 → 1.44 best
-    at 4; session windows 2.28 → 2.17.  Default is 4 — low enough to
-    cut the commit overhead, high enough that the largest local state
-    (~39k minute windows) still spreads ~10k keys/partition.  Earlier
-    steps of the same measurement: 32 → 8 took chained from 3.3 s to
-    1.7 s.  On a cluster, size UP per expected keys instead — same
-    knob, opposite direction.  Restores the session conf on exit;
-    serialized via _STATE_SCOPE_LOCK (see note above)."""
+    independent of how batch shuffles are sized.  The HDFS-backed state
+    store writes one delta file and one checksum sidecar per partition
+    per stateful operator per trigger, and each checkpoint file's cost
+    is the helper processes Hadoop's local filesystem starts for it
+    (chmod, readlink, when its native library is not loaded), not the
+    bytes written.  The engine session names the FileSystem-based
+    checkpoint manager on a local filesystem (session.checkpoint_conf),
+    which starts 2 helpers per file instead of Spark's default 10, and
+    at this scale the partition count no longer sets the commit cost or
+    the trigger time: with 1, 2 and 4 partitions a closed-loop trigger
+    of the reference stream (2,000 events, 4-core VM, one run each)
+    took 329, 251 and 293 ms, of which 16, 28 and 97 ms was state commit
+    summed over the partitions (at 4 under Spark's default manager:
+    414 ms, of which 362 ms state commit).
+    Default is 4, so the largest local state (~39k minute windows) still
+    spreads ~10k keys/partition.  On a cluster, size UP per expected
+    keys.  Restores the session conf on exit; serialized via
+    _STATE_SCOPE_LOCK (see note above)."""
     n = n or int(os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", "4"))
     key = "spark.sql.shuffle.partitions"
     with _STATE_SCOPE_LOCK:
@@ -304,14 +307,15 @@ def stream_chained_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Cost profile (r09, sf0.1, recentProgress durationMs): the second
     stateful operator adds ~0.3 s of addBatch compute and ~0.5 s of
-    state-store commit per run at 8 state partitions — the commit side
-    is FIXED per-partition delta-file overhead, not re-aggregation
-    work, and scales ~linearly with the partition count (profiled 2/4/
-    8/16).  That is why the engine default is 4 (scoped_state_
-    partitions); a foreachBatch rollup reusing stage-1 output would
-    drop the second state store but forfeit the one-plan chaining this
-    operator exists to demonstrate, and would not touch the dominant
-    cost class."""
+    state-store commit per run at 8 state partitions.  The commit side
+    is not re-aggregation work: it is the helper processes Hadoop's
+    local filesystem starts for every checkpoint file (a delta and its
+    checksum sidecar per partition per operator).  With the engine's
+    local checkpoint manager (session.checkpoint_conf) each file starts
+    2 helpers instead of 10, and the partition count no longer
+    sets the commit cost at this scale.  A foreachBatch rollup reusing
+    stage-1 output would drop the second state store but forfeit the
+    one-plan chaining this operator exists to demonstrate."""
     path = _stream_source_dir(sf_dir)
     name = f"chained_{next(_run_counter)}"
 

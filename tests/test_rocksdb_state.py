@@ -11,7 +11,11 @@ import itertools
 
 from pyspark.sql import functions as F
 
-from kafka_stream_processing_spark.sources.tables import table
+from kafka_stream_processing_spark.sources.tables import (
+    normalize_events,
+    table,
+    table_schema,
+)
 from kafka_stream_processing_spark.streaming.unique_users import (
     _stream_source_dir,
     build_windowed_dedup,
@@ -28,10 +32,9 @@ def test_flagship_streaming_on_rocksdb_state_store(spark, sf_small):
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB)
     try:
         path = _stream_source_dir(sf_small)
-        raw = spark.read.parquet(path).schema
-        from kafka_stream_processing_spark.sources.tables import normalize_events
-
-        stream = normalize_events(spark.readStream.schema(raw).parquet(path))
+        stream = normalize_events(
+            spark.readStream.schema(table_schema("events", path)).parquet(path)
+        )
         name = f"rocksdb_{next(_uniq)}"
         q = (
             build_windowed_dedup(stream)
